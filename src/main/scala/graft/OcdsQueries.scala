@@ -290,8 +290,8 @@ object OcdsQueries {
         // public ocdsmerge spec's other half, beyond reference parity)
         releasesFromEvents(s, d, dupIds = false)
           // explicit N: opt out of AQE's byte-based coalescing for the
-          // CPU-dense versioned merge (Compile.mergeParallelism's note)
-          .repartition(s.sessionState.conf.numShufflePartitions, col("ocid"))
+          // CPU-dense versioned merge (Compile.shuffleParallelism's note)
+          .repartition(Compile.shuffleParallelism(s), col("ocid"))
           .sortWithinPartitions("ocid", "date", "tiebreak")
           .select("ocid", "release")
           .as[(String, String)]

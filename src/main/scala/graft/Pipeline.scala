@@ -23,15 +23,27 @@ import graft.ocds.{Compile, Upgrade}
   * the `collection_note` lake table.
   *
   * The reference runs this as seven RabbitMQ workers against PostgreSQL;
-  * here each stage is one Spark job and the worker hand-offs are the
-  * SEAMS between [[load]] and [[compileAndFinish]]: `load(keepOpen=true)`
-  * leaves the collection open exactly like `load --keep-open`
-  * (`load.py:156-161`), more files arrive via [[loadFilesInto]] (the
-  * file_worker's job run inline, driven by the CLI's `addfiles`), a later
-  * close releases the compile gate, and [[compileAndFinish]] is the
-  * compiler+checker+finisher worker chain as one call. [[loadAndCompile]]
-  * composes the stages for the common closed-load case. The only
-  * cross-node movement is Spark shuffles.
+  * here each stage is a few Spark jobs, and the data-independent ones run
+  * side by side as [[Legs]] on driver threads:
+  *  - a release-package batch ([[loadFilesInto]]) materializes its items
+  *    (and their upgrade) once, then writes four legs: the `release` facts
+  *    (original rows, then upgraded rows, in order within the one leg),
+  *    the `data` store, `package_data`, and the upgrade notes;
+  *  - [[compileAndFinish]] runs the compile chain (bucketed input →
+  *    merge → `compiled_release` + notes) beside the V1 structural check.
+  * ONE WRITER PER TABLE: no two legs ever write the same table.
+  * `FileOutputCommitter` stages every job writing one path under the
+  * same `_temporary` directory, so concurrent appends to one table are
+  * unsafe; two writes to one table stay sequential inside one leg.
+  *
+  * The worker hand-offs are the SEAMS between [[load]] and
+  * [[compileAndFinish]]: `load(keepOpen=true)` leaves the collection open
+  * exactly like `load --keep-open` (`load.py:156-161`), more files arrive
+  * via [[loadFilesInto]] (the file_worker's job run inline, driven by the
+  * CLI's `addfiles`), a later close releases the compile gate, and
+  * [[compileAndFinish]] is the compiler+checker+finisher worker chain as
+  * one call. [[loadAndCompile]] composes the stages for the common
+  * closed-load case. The only cross-node movement is Spark shuffles.
   */
 object Pipeline {
 
@@ -229,47 +241,88 @@ object Pipeline {
       upgradedId: Option[Long],
       dt: graft.ingest.FormatDetect.DataType): (Control.Plane, Long, Long) = {
     var plane = plane0
-    // persisted: the fact write and the dedup-store write both consume it —
-    // without the persist each would re-open and re-parse every input file
+    // persisted and counted up front: the fact, dedup-store and upgrade
+    // legs below all consume it — without the persist each would re-open
+    // and re-parse every input file, and without the count the concurrent
+    // legs would each race to parse it
     val items = Ingest.loadItems(spark, paths, dt).toDF()
       .withColumn("collection_id", lit(collectionId))
       .persist()
-    Sink.writeFacts(items, s"$lakeDir/release")
-    Sink.writeDedupStore(Ingest.dedupData(items), s"$lakeDir/data")
-    val pkgs = Ingest.loadPackageData(spark, paths, dt).toDF()
-    // persisted so later jobs (compile checks, addchecks, metadata) can
-    // rebuild envelopes without re-reading the source files
-    Sink.writeByCollection(
-      pkgs.withColumn("collection_id", lit(collectionId)), s"$lakeDir/package_data")
+    val nItems = items.count()
+    // optional upgrade, applied during load like `file_worker.py:330-335`:
+    // a narrow map re-content-addressing each item, materialized once (a
+    // noop write: a scan of the cache, no count's exchange) because two
+    // legs (facts, notes) consume it. `up` (and therefore `items`) stays
+    // persisted until both legs have run — unpersisting earlier would
+    // silently re-run the whole load+upgrade from the source files inside
+    // a leg
+    val up = upgradedId.map { uid =>
+      val u = Upgrade.upgradeItems(items, spark).toDF().persist()
+      u.write.format("noop").mode("overwrite").save()
+      uid -> u
+    }
 
-    // optional upgrade leg, applied during load like `file_worker.py:
-    // 330-335`: a narrow map re-content-addressing each item; the upgraded
-    // collection gets its own file/step lifecycle rows, and the
-    // differs-warnings become WARNING notes on it.
-    // NOTE: `up` (and therefore `items`) must stay persisted until the
-    // notes frame derived from it is materialized below — unpersisting
-    // earlier would silently re-run the whole load+upgrade from the source
-    // files when the collection_note write finally evaluates
-    var nNotes = 0L
-    upgradedId.foreach { uid =>
-      val up = Upgrade.upgradeItems(items, spark).toDF().persist()
-      Sink.writeFacts(
-        up.drop("upgrade_warnings").withColumn("collection_id", lit(uid)),
-        s"$lakeDir/release")
-      val notes = Notes.fromUpgradeWarnings(up, uid).persist()
-      Sink.writeByCollection(notes, s"$lakeDir/collection_note")
-      nNotes += notes.count()
-      notes.unpersist()
+    // four independent legs, one writer per table. Each leg returns the
+    // collection notes it wrote (only the upgrade-notes leg writes any)
+    val nNotes = Legs.inParallel(
+      // release facts: original rows, then the upgraded collection's —
+      // sequential, never concurrent appends to one table
+      () => {
+        Sink.writeFacts(items, s"$lakeDir/release")
+        up.foreach { case (uid, u) =>
+          Sink.writeFacts(
+            u.drop("upgrade_warnings").withColumn("collection_id", lit(uid)),
+            s"$lakeDir/release")
+        }
+        0L
+      },
+      () => { storeNewData(spark, items, lakeDir); 0L },
+      // persisted so later jobs (compile checks, addchecks, metadata) can
+      // rebuild envelopes without re-reading the source files
+      () => {
+        Sink.writeByCollection(
+          Ingest.loadPackageData(spark, paths, dt).toDF()
+            .withColumn("collection_id", lit(collectionId)),
+          s"$lakeDir/package_data")
+        0L
+      },
+      // the upgrade's differs-warnings become WARNING notes on the
+      // upgraded collection
+      () => up.fold(0L) { case (uid, u) =>
+        val notes = Notes.fromUpgradeWarnings(u, uid).persist()
+        Sink.writeByCollection(notes, s"$lakeDir/collection_note")
+        try notes.count() finally { notes.unpersist(); () }
+      }).sum
+
+    // the upgraded collection gets its own file/step lifecycle rows
+    up.foreach { case (uid, u) =>
       plane = paths.foldLeft(plane)(Control.registerFile(_, uid, _))
       plane = paths.foldLeft(plane)((p, f) =>
         Control.completeStep(p, uid, Control.StepName.Load, Some(f)))
       plane = plane.copy(collections = plane.collections.updated(uid,
         plane.collection(uid).copy(dataTypeFormat = Some(dt.format))))
-      up.unpersist()
+      u.unpersist()
     }
-    val nItems = items.count()
     items.unpersist()
     (plane, nItems, nNotes)
+  }
+
+  /** S8 insert-if-absent (the reference's get-or-create, `util.py:93-110`):
+    * append the distinct documents of `rows` whose content hash the store
+    * does not hold yet, so a release re-offered by a later batch, or by
+    * another collection, stays one stored row. The anti-join side is the
+    * store pruned to the batch's hash buckets ([[Sink.dedupStoreSlice]]);
+    * a fresh lake has no store and skips it. */
+  private def storeNewData(spark: SparkSession, rows: DataFrame, lakeDir: String): Unit = {
+    val path = s"$lakeDir/data"
+    Sink.dedupStoreSlice(spark, path, rows) match {
+      case None => Sink.writeDedupStore(Ingest.dedupData(rows), path)
+      // checkpointed, not persisted, BEFORE the append: the anti-join
+      // plan reads the very table being written, and a cached plan over
+      // that path would be re-listed and invalidated by the append itself
+      case Some(stored) =>
+        Sink.writeDedupStore(Ingest.dedupData(rows, Some(stored)).localCheckpoint(), path)
+    }
   }
 
   /** Record-package leg (`file_worker.py:351-360` Record rows +
@@ -294,7 +347,7 @@ object Pipeline {
       .withColumn("collection_id", lit(collectionId))
       .persist()
     Sink.writeFacts(records, s"$lakeDir/record")
-    Sink.writeDedupStore(Ingest.dedupData(records), s"$lakeDir/data")
+    storeNewData(spark, records, lakeDir)
     val pkgs = Ingest.loadPackageData(spark, paths, dt).toDF()
     Sink.writeByCollection(
       pkgs.withColumn("collection_id", lit(collectionId)), s"$lakeDir/package_data")
@@ -403,7 +456,7 @@ object Pipeline {
     import spark.implicits._
     var plane = plane0
     val items = Ingest.loadItems(spark, paths, dt).toDF().persist()
-    Sink.writeDedupStore(Ingest.dedupData(items), s"$lakeDir/data")
+    storeNewData(spark, items, lakeDir)
     // filename rides along (the reference's CompiledRelease keeps its
     // collection_file FK): it is this format's ONLY filename-keyed trace
     // in the lake, which the streaming loader's crash repair keys on
@@ -501,6 +554,55 @@ object Pipeline {
         .getOrElse(throw new IllegalStateException("collection not completable"))
       return CompileStage(compiledId, 0L, 0L, 0L, plane)
     }
+    // the compile chain (bucket → merge → compiled facts + notes) runs
+    // as one leg; V1 structural checks on the ORIGINAL rows run beside it
+    // (they only read release/package_data, which the chain never
+    // writes): each item's envelope is rebuilt from ITS file's package
+    // metadata (checker.py:101-108) and validated. The check row's id is
+    // the fact row's stable content key — deterministic across runs and
+    // partitionings (the reference keys release_check on the release
+    // row's PK), unlike monotonically_increasing_id.
+    val facts = Sink.readFacts(spark, s"$lakeDir/release")
+      .filter(col("collection_id") === collectionId)
+    val pkgs = spark.read.parquet(s"$lakeDir/package_data")
+      .filter(col("collection_id") === collectionId)
+    val Seq(nNotes, checkFailures) = Legs.inParallel(
+      () => compileMerged(spark, lakeDir, compileBaseId, compiledId),
+      () => Checker.checkItems(
+        facts.select("filename", "ocid", "release_id", "hash_md5", "data")
+          .join(pkgs.select("filename", "package_data"), Seq("filename"), "left")
+          .select(Checker.checkId.as("id"), col("data"), col("package_data")),
+        "release", spark)
+        .filter(!col("ok")).count())
+    plane = plane.copy(collections = plane.collections.updated(compiledId,
+      plane.collection(compiledId).copy(compilationEnqueued = true)))
+
+    // completion gates + cached counts, leaf-first: compiled → upgraded →
+    // original
+    val nItems = facts.count()
+    val nCompiled = Sink.readFacts(spark, s"$lakeDir/compiled_release")
+      .filter(col("collection_id") === compiledId).count()
+    plane = Control.complete(plane, compiledId, now, 0L, 0L, nCompiled)
+      .getOrElse(throw new IllegalStateException("compiled collection not completable"))
+    upgradedId.foreach { uid =>
+      plane = Control.complete(plane, uid, now, nItems, 0L, 0L)
+        .getOrElse(throw new IllegalStateException("upgraded collection not completable"))
+    }
+    plane = Control.complete(plane, collectionId, now, nItems, 0L, 0L)
+      .getOrElse(throw new IllegalStateException("collection not completable"))
+
+    CompileStage(compiledId, nCompiled, checkFailures, nNotes, plane)
+  }
+
+  /** [[compileAndFinish]]'s merge chain: ONE merge pass over the
+    * compile base's release facts, emitting compiled rows into
+    * `compiledId`'s compiled_release partition and merge warnings as its
+    * notes. Returns the notes written. */
+  private def compileMerged(
+      spark: SparkSession,
+      lakeDir: String,
+      compileBaseId: Long,
+      compiledId: Long): Long = {
     // Bucket once at the compile boundary, compile with ZERO exchanges:
     // `writeFacts` already ocid-clustered the lake files at load, so this
     // write re-materializes that distribution WITH catalog metadata, and
@@ -556,41 +658,7 @@ object Pipeline {
     Sink.writeByCollection(compileNotes, s"$lakeDir/collection_note")
     compileNotes.unpersist()
     compileOut.unpersist()
-    plane = plane.copy(collections = plane.collections.updated(compiledId,
-      plane.collection(compiledId).copy(compilationEnqueued = true)))
-
-    // V1 structural checks on the ORIGINAL rows: rebuild each item's
-    // envelope from ITS file's package metadata (checker.py:101-108) and
-    // validate. The check row's id is the fact row's stable content key —
-    // deterministic across runs and partitionings (the reference keys
-    // release_check on the release row's PK), unlike
-    // monotonically_increasing_id.
-    val facts = Sink.readFacts(spark, s"$lakeDir/release")
-      .filter(col("collection_id") === collectionId)
-    val pkgs = spark.read.parquet(s"$lakeDir/package_data")
-      .filter(col("collection_id") === collectionId)
-    val checkFailures = Checker.checkItems(
-      facts.select("filename", "ocid", "release_id", "hash_md5", "data")
-        .join(pkgs.select("filename", "package_data"), Seq("filename"), "left")
-        .select(Checker.checkId.as("id"), col("data"), col("package_data")),
-      "release", spark)
-      .filter(!col("ok")).count()
-
-    // completion gates + cached counts, leaf-first: compiled → upgraded →
-    // original
-    val nItems = facts.count()
-    val nCompiled = Sink.readFacts(spark, s"$lakeDir/compiled_release")
-      .filter(col("collection_id") === compiledId).count()
-    plane = Control.complete(plane, compiledId, now, 0L, 0L, nCompiled)
-      .getOrElse(throw new IllegalStateException("compiled collection not completable"))
-    upgradedId.foreach { uid =>
-      plane = Control.complete(plane, uid, now, nItems, 0L, 0L)
-        .getOrElse(throw new IllegalStateException("upgraded collection not completable"))
-    }
-    plane = Control.complete(plane, collectionId, now, nItems, 0L, 0L)
-      .getOrElse(throw new IllegalStateException("collection not completable"))
-
-    CompileStage(compiledId, nCompiled, checkFailures, nNotes, plane)
+    nNotes
   }
 
   /** The session-catalog name of a lake's ocid-bucketed compile-input
@@ -690,11 +758,6 @@ object Pipeline {
     CompileStage(collectionId, nCompiled, 0L, 0L, plane)
   }
 
-  /** Load every file under `inputDir` into collection `collectionId`,
-    * optionally upgrade 1.0→1.1 into a derived collection, compile into the
-    * final derived collection, structurally check the loaded rows, and
-    * finalize the whole tree. `now` is the caller's clock (kept pure for
-    * testability, like the control plane). */
   /** Finisher leg for a load that planned NO compile step (`load` without
     * `--compile` — reference load.py:34: additional processing is opt-in):
     * there is no compiled child and no merge to run, so the chain is just
@@ -853,6 +916,11 @@ object Pipeline {
     }
   }
 
+  /** Load every file under `inputDir` into collection `collectionId`,
+    * optionally upgrade 1.0→1.1 into a derived collection, compile into the
+    * final derived collection, structurally check the loaded rows, and
+    * finalize the whole tree. `now` is the caller's clock (kept pure for
+    * testability, like the control plane). */
   def loadAndCompile(
       spark: SparkSession,
       inputDir: String,

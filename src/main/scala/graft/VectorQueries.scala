@@ -2653,46 +2653,34 @@ object VectorQueries {
         // probes × K rank frame on its own driver thread (Spark actions
         // are thread-safe; job descriptions are thread-local) and the
         // fusion/readout consume the checkpointed frames. Results are
-        // unchanged — every leg is deterministic and Await rethrows a
-        // leg's failure loudly.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        val (lexRanks, denseSys, denseTru) =
-          try {
-            val fLex = Future {
-              val (_, _, lexRanks0) = lexStoreRanksOf(s, d, KnnQMod)
-              // the lexical list feeds BOTH fusions — checkpoint the
-              // bounded probes × LexK frame once (the multi eval's tru
-              // discipline)
-              lexRanks0
-                .select(col("qid"), col("doc_id"), col("rank").as("rank_lex"))
-                .localCheckpoint()
-            }
-            val fSys = Future {
-              val vstore = hybridEvalStoreOf(s, d)
-              val queries = Tables.embeddings(s, d)
-                .filter(pmod(col("vec_id"), lit(KnnQMod)) === 0)
-                .select(col("vec_id").as("qid"), col("embedding"))
-              graft.streaming.VectorStore.knnJoin(s, vstore, queries,
-                  excludeWhere = Some(pmod(col("vec_id"), lit(KnnQMod)) === 0),
-                  adcNominate = !sq8Dense, sq8Nominate = sq8Dense)
-                .select(col("qid"), col("vec_id").as("doc_id"),
-                  col("knn_rank").cast(LongType).as("rank_dense"))
-                .localCheckpoint()
-            }
-            val fTru = Future {
-              knnJoinExact(s, d)
-                .select(col("qid"), col("vec_id").as("doc_id"),
-                  col("knn_rank").cast(LongType).as("rank_dense"))
-                .localCheckpoint()
-            }
-            (Await.result(fLex, Duration.Inf),
-              Await.result(fSys, Duration.Inf),
-              Await.result(fTru, Duration.Inf))
-          } finally pool.shutdown()
+        // unchanged — every leg is deterministic and Legs.inParallel
+        // rethrows a leg's failure loudly.
+        val Seq(lexRanks, denseSys, denseTru) = Legs.inParallel(
+          () => {
+            val (_, _, lexRanks0) = lexStoreRanksOf(s, d, KnnQMod)
+            // the lexical list feeds BOTH fusions — checkpoint the
+            // bounded probes × LexK frame once (the multi eval's tru
+            // discipline)
+            lexRanks0
+              .select(col("qid"), col("doc_id"), col("rank").as("rank_lex"))
+              .localCheckpoint()
+          },
+          () => {
+            val vstore = hybridEvalStoreOf(s, d)
+            val queries = Tables.embeddings(s, d)
+              .filter(pmod(col("vec_id"), lit(KnnQMod)) === 0)
+              .select(col("vec_id").as("qid"), col("embedding"))
+            graft.streaming.VectorStore.knnJoin(s, vstore, queries,
+                excludeWhere = Some(pmod(col("vec_id"), lit(KnnQMod)) === 0),
+                adcNominate = !sq8Dense, sq8Nominate = sq8Dense)
+              .select(col("qid"), col("vec_id").as("doc_id"),
+                col("knn_rank").cast(LongType).as("rank_dense"))
+              .localCheckpoint()
+          },
+          () => knnJoinExact(s, d)
+            .select(col("qid"), col("vec_id").as("doc_id"),
+              col("knn_rank").cast(LongType).as("rank_dense"))
+            .localCheckpoint())
         val discDf = ndcgDiscounts(LexK).toDF("rank_fused", "disc", "cum")
         val sysF = rrfFuseByQidOf(lexRanks, denseSys)
           .filter(col("rank_fused") <= LexK)
@@ -3904,24 +3892,12 @@ object VectorQueries {
               .over(Window.orderBy(score.desc, id)).cast(LongType).as("rank"))
         // r21 (guide §2.6): the three leg materializations are
         // data-independent — overlap them on driver threads exactly like
-        // hybridEvalOf (each is deterministic; Await rethrows loudly)
-        val (bruteTop, ann, lex) = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          try {
-            val fBrute = Future(
-              rankBy(bruteCosineOf(s, d), col("cosine"), col("vec_id"), K)
-                .localCheckpoint())
-            val fAnn = Future(ivfPqRefinedCosine(s, d, probes = 4).localCheckpoint())
-            val fLex = Future(bm25TopKRanks(s, d, K).localCheckpoint())
-            (Await.result(fBrute, Duration.Inf),
-              Await.result(fAnn, Duration.Inf),
-              Await.result(fLex, Duration.Inf))
-          } finally pool.shutdown()
-        }
+        // hybridEvalOf (each is deterministic; a failing leg rethrows)
+        val Seq(bruteTop, ann, lex) = Legs.inParallel(
+          () => rankBy(bruteCosineOf(s, d), col("cosine"), col("vec_id"), K)
+            .localCheckpoint(),
+          () => ivfPqRefinedCosine(s, d, probes = 4).localCheckpoint(),
+          () => bm25TopKRanks(s, d, K).localCheckpoint())
         val truthD = bruteTop.filter(col("rank") <= 10).select("doc_id")
         val annSys = rankBy(ann, col("cosine"), col("vec_id"), 10)
         val dnsB = bruteTop.withColumnRenamed("rank", "rank_dense")
@@ -4070,20 +4046,11 @@ object VectorQueries {
         // r21 (guide §2.6): the truth checkpoint and the system leg's
         // eager setup (knnJoinIvf trains the coarse centroids on the
         // driver) are independent — overlap them on driver threads
-        val (tru, sysJoin) = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutorService(pool)
-          try {
-            val fTru = Future(knnJoinExact(s, d)
-              .select(col("qid"), col("vec_id")).withColumn("rel", lit(1))
-              .localCheckpoint())
-            val fSys = Future(knnJoinIvf(s, d))
-            (Await.result(fTru, Duration.Inf), Await.result(fSys, Duration.Inf))
-          } finally pool.shutdown()
-        }
+        val Seq(tru, sysJoin) = Legs.inParallel(
+          () => knnJoinExact(s, d)
+            .select(col("qid"), col("vec_id")).withColumn("rel", lit(1))
+            .localCheckpoint(),
+          () => knnJoinIvf(s, d))
         // the driver-materialized discount table (r19: ndcg@k joins as a
         // k-row literal — the distributed plan never computes a log)
         val discDf = ndcgDiscounts(LexK).toDF("knn_rank", "disc", "cum")

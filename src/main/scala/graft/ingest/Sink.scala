@@ -1,7 +1,9 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ocds.Compile
 
 /** Persistence layout (SURVEY.md §2 S7, §1.4's 100 TB layout; reference
   * `file_worker.py:322-386` bulk_create + `core/settings.py:262-263`
@@ -287,11 +289,16 @@ object Sink {
       if (merge) spark.read.option("mergeSchema", "true").parquet(path)
       else spark.read.parquet(path)).toOption
 
-  /** S8 store: one row per content hash, partitioned by hash prefix. */
+  /** S8 store: one row per content hash, partitioned by hash prefix. The
+    * keyed repartition takes an explicit task count
+    * ([[graft.ocds.Compile.shuffleParallelism]]): AQE would coalesce the
+    * small shuffle to ONE task that writes every bucket directory in turn.
+    * Each bucket still lands wholly in one task — one file per touched
+    * bucket directory. */
   def writeDedupStore(data: DataFrame, path: String, mode: String = "append"): Unit =
     data
-      .withColumn("hash_bucket", substring(col("hash_md5"), 1, 2))
-      .repartition(col("hash_bucket"))
+      .withColumn("hash_bucket", hashBucket(col("hash_md5")))
+      .repartition(Compile.shuffleParallelism(data.sparkSession), col("hash_bucket"))
       .write
       .partitionBy("hash_bucket")
       .mode(mode)
@@ -299,6 +306,26 @@ object Sink {
 
   def readDedupStore(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
+
+  private def hashBucket(hash: Column): Column = substring(hash, 1, 2)
+
+  /** The stored hashes sharing a `hash_bucket` with `rows` — the anti-join
+    * side of S8's insert-if-absent, statically pruned to the touched
+    * bucket partitions (a driver-side isin bounded by the 256-value bucket
+    * domain, the [[graft.Pipeline.checkedSlice]] idiom), so a batch reads
+    * its buckets' share of the store, not all of it. The schema is given:
+    * a store whose buckets all look numeric ("07", "42") would otherwise
+    * infer an integer partition column. None while no store exists. */
+  def dedupStoreSlice(spark: SparkSession, path: String, rows: DataFrame): Option[DataFrame] =
+    if (!new java.io.File(path).exists()) None
+    else {
+      import spark.implicits._
+      val touched = rows.select(hashBucket(col("hash_md5"))).distinct().as[String].collect()
+      Some(spark.read.schema("hash_md5 STRING, hash_bucket STRING")
+        .parquet(path)
+        .filter(col("hash_bucket").isin(touched.toIndexedSeq: _*))
+        .select("hash_md5"))
+    }
 
   /** Sink for small per-collection tables (collection_note, package_data):
     * same collection_id partitioning as the fact tables (wipes stay
@@ -324,7 +351,9 @@ object Sink {
     * batch ids' buckets instead of the collection's whole check history
     * (VERDICT r15 finding #1: the anti-join side grew with stream
     * lifetime). One narrow shuffle on the partition pair keeps per-batch
-    * file counts = touched buckets. A lake whose check tables were
+    * file counts = touched buckets; like [[writeDedupStore]] it takes an
+    * explicit task count, so AQE cannot funnel every bucket through one
+    * writer task. A lake whose check tables were
     * written by the pre-bucket (flat collection_id) layout needs a
     * one-time rewrite: the layouts cannot mix inside one table, and an
     * append would corrupt partition discovery for EVERY later read — so
@@ -334,7 +363,8 @@ object Sink {
     requireBucketedCheckLayout(path)
     rows
       .withColumn("check_bucket", pmod(col("id"), lit(CheckBuckets.toLong)))
-      .repartition(col("collection_id"), col("check_bucket"))
+      .repartition(Compile.shuffleParallelism(rows.sparkSession),
+        col("collection_id"), col("check_bucket"))
       .write
       .partitionBy("collection_id", "check_bucket")
       .mode(mode)

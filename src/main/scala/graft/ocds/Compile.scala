@@ -60,17 +60,20 @@ object Compile {
   private def groupedByKey(it: Iterator[(String, String)]): Iterator[(String, Seq[String])] =
     consecutiveGroups(it)(_._1).map { case (k, rows) => k -> rows.map(_._2) }
 
-  /** Partition count for the CPU-dense merge stages (r20): these shuffles
-    * carry compact rows but feed a ~µs-per-row Jackson merge, and AQE's
-    * BYTE-based coalescing (advisory size / minPartitionSize) serializes
-    * exactly the stage that needs cores — measured q_compile_ocds running
-    * its whole merge on 5 of 24 available slots. An EXPLICIT numPartitions
-    * on the keyed repartition opts the exchange out of AQE coalescing at
-    * the value the operator already configured (spark.sql.shuffle.
-    * partitions — the env-driven knob the harness and a real cluster both
-    * set), so the merge parallelism follows the configured cores, not the
-    * shuffle's byte count. */
-  private def mergeParallelism(s: SparkSession): Int =
+  /** Partition count for keyed repartitions whose consumers are CPU- or
+    * file-bound rather than byte-bound: the merge stages here (compact rows
+    * feeding a ~µs-per-row Jackson merge) and the lake's bucket-partitioned
+    * writes (`Sink.writeDedupStore`/`writeChecks`, where each bucket
+    * directory costs a Parquet writer plus a commit). AQE's BYTE-based
+    * coalescing (advisory size / minPartitionSize) serializes exactly these
+    * stages — measured q_compile_ocds running its whole merge on 5 of 24
+    * available slots, and a 256-bucket dedup-store append on one task. An
+    * EXPLICIT numPartitions on the keyed repartition opts the exchange out
+    * of AQE coalescing at the value the operator already configured
+    * (spark.sql.shuffle.partitions — the env-driven knob the harness and a
+    * real cluster both set), so the stage's parallelism follows the
+    * configured cores, not the shuffle's byte count. */
+  def shuffleParallelism(s: SparkSession): Int =
     s.sessionState.conf.numShufflePartitions
 
   /** The shared physical plan: one ocid-keyed shuffle + sorted single-pass
@@ -80,7 +83,7 @@ object Compile {
       f: (String, Int, Merge.Result) => IterableOnce[T]): Dataset[T] = {
     import s.implicits._
     releases
-      .repartition(mergeParallelism(s), col("ocid"))
+      .repartition(shuffleParallelism(s), col("ocid"))
       .sortWithinPartitions("ocid", "date", "tiebreak")
       .select("ocid", "release")
       .as[(String, String)]
@@ -234,7 +237,7 @@ object Compile {
       registry: Map[String, Extensions.RuleDelta] = Extensions.defaultRegistry): Dataset[ExtSummary] = {
     import s.implicits._
     releases
-      .repartition(mergeParallelism(s), col("ocid"))
+      .repartition(shuffleParallelism(s), col("ocid"))
       .sortWithinPartitions("ocid", "date", "tiebreak")
       .select("ocid", "release", "extensions")
       .as[(String, String, Seq[String])]
@@ -273,7 +276,7 @@ object Compile {
   def recordSummariesAndNotes(records: DataFrame, s: SparkSession): Dataset[RecordOut] = {
     import s.implicits._
     records
-      .repartition(mergeParallelism(s), col("ocid"))
+      .repartition(shuffleParallelism(s), col("ocid"))
       .sortWithinPartitions("ocid", "filename", "record_seq")
       .select("ocid", "record")
       .as[(String, String)]

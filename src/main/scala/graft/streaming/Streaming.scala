@@ -416,8 +416,10 @@ object Streaming {
           val (p2, _, _) = graft.Pipeline.loadFilesInto(
             spark, fresh, lakeDir, p, collectionId, upgradedId)
           p = p2
-          // incremental NEAR-dup (VERDICT r11 Next #5): the exact-hash
-          // dedup above is blind to near-identical re-arrivals; probe the
+          // incremental NEAR-dup (VERDICT r11 Next #5): loadFilesInto's
+          // exact-hash dedup (insert-if-absent into the `data` store,
+          // anti-joined against the stored hashes of the batch's
+          // buckets) is blind to near-identical re-arrivals; probe the
           // batch's docs against the persistent signature store (bucket-
           // pruned, never a full-store scan — see NeardupStore), flag the
           // hits, then append this batch's signatures. Probe-before-append

@@ -81,6 +81,34 @@ class PipelineSpec extends AnyFunSuite {
     assert(survivors.count() === 0)
   }
 
+  test("the dedup store stays content-addressed across batches (insert-if-absent, S8)") {
+    import org.apache.spark.sql.functions.{col, countDistinct}
+    val dir = inputTree()
+    val lake = Files.createTempDirectory("graft-lake-dedup").toString
+    val stage = Pipeline.load(s, dir.toString, lake, keepOpen = true)
+    // a later batch re-offers release b1 byte-for-byte, plus one new release
+    val later = Files.createTempDirectory("graft-pipeline-later").resolve("c.json")
+    Files.writeString(later,
+      """{"uri": "http://x/c", "version": "1.1", "publisher": {"name": "C"},
+        | "publishedDate": "2020-01-04T00:00:00Z",
+        | "releases": [
+        |   {"ocid": "ocds-b", "id": "b1", "date": "2020-01-03T00:00:00Z",
+        |    "tag": ["planning"]},
+        |   {"ocid": "ocds-c", "id": "c1", "date": "2020-01-05T00:00:00Z",
+        |    "tag": ["tender"], "initiationType": "tender"}
+        | ]}""".stripMargin)
+    val (_, n2, _) = Pipeline.loadFilesInto(
+      s, Seq(later.toString), lake, stage.plane, stage.collectionId, None)
+    assert(n2 === 2) // both items land as facts of the collection
+    val store = Sink.readDedupStore(s, s"$lake/data")
+    // …but the store holds each content hash once: a1, a2, b1, c1
+    assert(store.count() === 4)
+    assert(store.agg(countDistinct(col("hash_md5"))).head().getLong(0) === 4)
+    val facts = Sink.readFacts(s, s"$lake/release")
+    assert(facts.select("hash_md5").distinct().count() === 4)
+    assert(facts.count() === 5)
+  }
+
   test("upgrade=true builds original → upgraded → compiled, upgrades during load, persists notes") {
     import org.apache.spark.sql.functions.col
     val dir = Files.createTempDirectory("graft-pipe-up")

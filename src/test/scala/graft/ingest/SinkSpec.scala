@@ -64,6 +64,43 @@ class SinkSpec extends AnyFunSuite {
     assert(fresh.select("hash_md5").as[String].collect().toSeq === Seq("cc44"))
   }
 
+  /** Per directory of a partitioned write, the writer task of each part
+    * file (`part-<task>-<job>…`: the Spark partition that wrote it). */
+  private def writerTasks(dir: String): Map[String, Seq[Int]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.toSeq
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .groupBy(f => root.relativize(f.getParent).toString)
+      .map { case (d, fs) => d -> fs.map(_.getFileName.toString.slice(5, 10).toInt) }
+    finally walk.close()
+  }
+
+  test("bucket-partitioned writes: one file per touched bucket, shuffle.partitions writer tasks") {
+    import s.implicits._
+    // AQE would coalesce these tiny shuffles to ONE task writing every
+    // bucket directory; the explicit count spreads the buckets over the
+    // configured partitions while each bucket stays whole in one task
+    val parallelism = s.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(parallelism > 1)
+    val storeDir = Files.createTempDirectory("graft-store-tasks").toString
+    val hashes = (0 until 16).map(i => f"$i%02x" + "feed")
+    Sink.writeDedupStore(hashes.map(h => (h, s"""{"h":"$h"}""")).toDF("hash_md5", "data"), storeDir)
+    val storeFiles = writerTasks(storeDir)
+    assert(storeFiles.keySet === hashes.map(h => s"hash_bucket=${h.take(2)}").toSet)
+    assert(storeFiles.values.forall(_.size == 1), storeFiles)
+    assert(storeFiles.values.flatten.toSet.size === parallelism, storeFiles)
+
+    val checkDir = Files.createTempDirectory("graft-checks-tasks").toString
+    Sink.writeChecks((0L until 16L).map(id => (id, true, 1L)).toDF("id", "ok", "collection_id"),
+      checkDir)
+    val checkFiles = writerTasks(checkDir)
+    assert(checkFiles.keySet === (0 until 16).map(b => s"collection_id=1/check_bucket=$b").toSet)
+    assert(checkFiles.values.forall(_.size == 1), checkFiles)
+    assert(checkFiles.values.flatten.toSet.size === parallelism, checkFiles)
+  }
+
   test("a bucketed fact table compiles with ZERO exchanges; plain input still shuffles once") {
     import org.apache.spark.sql.functions.col
     s.sql("DROP TABLE IF EXISTS graft_bucketed_spec")
