@@ -29,8 +29,9 @@ import graft.ocds.{Compile, Upgrade}
   *    (and their upgrade) once, then writes four legs: the `release` facts
   *    (original rows, then upgraded rows, in order within the one leg),
   *    the `data` store, `package_data`, and the upgrade notes;
-  *  - [[compileAndFinish]] runs the compile chain (bucketed input →
-  *    merge → `compiled_release` + notes) beside the V1 structural check.
+  *  - [[compileAndFinish]] runs the compile chain (release facts → one
+  *    ocid shuffle → merge → `compiled_release` + notes) beside the V1
+  *    structural check.
   * ONE WRITER PER TABLE: no two legs ever write the same table.
   * `FileOutputCommitter` stages every job writing one path under the
   * same `_temporary` directory, so concurrent appends to one table are
@@ -210,11 +211,6 @@ object Pipeline {
         d
       case None => Ingest.detectDataType(spark, paths.head)
     }
-    def setFormat(id: Long): Unit =
-      plane = plane.copy(collections = plane.collections.updated(id,
-        plane.collection(id).copy(dataTypeFormat = Some(dt.format))))
-    setFormat(collectionId)
-
     val (p2, nItems, nNotes) = dt.format match {
       case graft.ingest.FormatDetect.Format.RecordPackage =>
         loadRecordBatch(spark, paths, lakeDir, plane, collectionId, upgradedId, dt)
@@ -223,10 +219,19 @@ object Pipeline {
       case _ =>
         loadReleaseBatch(spark, paths, lakeDir, plane, collectionId, upgradedId, dt)
     }
-    plane = p2
-    plane = paths.foldLeft(plane)((p, f) =>
-      Control.completeStep(p, collectionId, Control.StepName.Load, Some(f)))
-    (plane, nItems, nNotes)
+    (markLoaded(p2, collectionId, paths, dt.format), nItems, nNotes)
+  }
+
+  /** Collection `id`'s lifecycle rows for a loaded batch: each of `paths`
+    * registered (a no-op for a file registered before the load), its LOAD
+    * step completed, and the batch's format recorded — the same for the
+    * loading collection and for its upgraded child. */
+  private def markLoaded(
+      plane0: Control.Plane, id: Long, paths: Seq[String], format: String): Control.Plane = {
+    val plane = paths.foldLeft(plane0)((p, f) =>
+      Control.completeStep(Control.registerFile(p, id, f), id, Control.StepName.Load, Some(f)))
+    plane.copy(collections = plane.collections.updated(id,
+      plane.collection(id).copy(dataTypeFormat = Some(format))))
   }
 
   /** Release-package leg of [[loadFilesInto]]: stream-load items into the
@@ -296,11 +301,7 @@ object Pipeline {
 
     // the upgraded collection gets its own file/step lifecycle rows
     up.foreach { case (uid, u) =>
-      plane = paths.foldLeft(plane)(Control.registerFile(_, uid, _))
-      plane = paths.foldLeft(plane)((p, f) =>
-        Control.completeStep(p, uid, Control.StepName.Load, Some(f)))
-      plane = plane.copy(collections = plane.collections.updated(uid,
-        plane.collection(uid).copy(dataTypeFormat = Some(dt.format))))
+      plane = markLoaded(plane, uid, paths, dt.format)
       u.unpersist()
     }
     items.unpersist()
@@ -371,11 +372,7 @@ object Pipeline {
       Sink.writeByCollection(notes, s"$lakeDir/collection_note")
       nNotes += notes.count()
       notes.unpersist()
-      plane = paths.foldLeft(plane)(Control.registerFile(_, uid, _))
-      plane = paths.foldLeft(plane)((p, f) =>
-        Control.completeStep(p, uid, Control.StepName.Load, Some(f)))
-      plane = plane.copy(collections = plane.collections.updated(uid,
-        plane.collection(uid).copy(dataTypeFormat = Some(dt.format))))
+      plane = markLoaded(plane, uid, paths, dt.format)
       compileSrc = upFacts
     }
 
@@ -410,23 +407,12 @@ object Pipeline {
         lit(compiledId).as("collection_id"), col("note.code").as("code"),
         col("note.note").as("note"),
         to_json(struct(col("note.ocid").as("ocid"))).as("data"))
-      val notes = (Sink.readOrEmpty(spark, s"$lakeDir/collection_note") match {
-        case Some(existing) => freshNotes.join(
-          existing.filter(col("collection_id") === compiledId)
-            .select("code", "note", "data"),
-          Seq("code", "note", "data"), "left_anti")
-        case None => freshNotes
-      }).persist()
-      // count (and thereby materialize the cache) BEFORE the append: the
-      // anti-join plan reads the very table being written
-      nNotes += notes.count()
-      Sink.writeByCollection(notes, s"$lakeDir/collection_note")
+      nNotes += appendNewNotes(spark, lakeDir, freshNotes, compiledId)
       Sink.writeFacts(
         out.filter(col("summary").isNotNull).select(col("summary.*"))
           .withColumn("filename", lit(null).cast(org.apache.spark.sql.types.StringType))
           .withColumn("collection_id", lit(compiledId)),
         s"$lakeDir/compiled_release")
-      notes.unpersist()
       out.unpersist()
       // the completion gate tracks per-file compile on the compile BASE
       // (finisher checks the compiled child's PARENT's files)
@@ -487,11 +473,7 @@ object Pipeline {
       Sink.writeByCollection(notes, s"$lakeDir/collection_note")
       nNotes += notes.count()
       notes.unpersist()
-      plane = paths.foldLeft(plane)(Control.registerFile(_, uid, _))
-      plane = paths.foldLeft(plane)((p, f) =>
-        Control.completeStep(p, uid, Control.StepName.Load, Some(f)))
-      plane = plane.copy(collections = plane.collections.updated(uid,
-        plane.collection(uid).copy(dataTypeFormat = Some(dt.format))))
+      plane = markLoaded(plane, uid, paths, dt.format)
       up.unpersist()
     }
     val nItems = items.count()
@@ -554,7 +536,7 @@ object Pipeline {
         .getOrElse(throw new IllegalStateException("collection not completable"))
       return CompileStage(compiledId, 0L, 0L, 0L, plane)
     }
-    // the compile chain (bucket → merge → compiled facts + notes) runs
+    // the compile chain (shuffle → merge → compiled facts + notes) runs
     // as one leg; V1 structural checks on the ORIGINAL rows run beside it
     // (they only read release/package_data, which the chain never
     // writes): each item's envelope is rebuilt from ITS file's package
@@ -562,24 +544,18 @@ object Pipeline {
     // the fact row's stable content key — deterministic across runs and
     // partitionings (the reference keys release_check on the release
     // row's PK), unlike monotonically_increasing_id.
-    val facts = Sink.readFacts(spark, s"$lakeDir/release")
-      .filter(col("collection_id") === collectionId)
-    val pkgs = spark.read.parquet(s"$lakeDir/package_data")
-      .filter(col("collection_id") === collectionId)
     val Seq(nNotes, checkFailures) = Legs.inParallel(
       () => compileMerged(spark, lakeDir, compileBaseId, compiledId),
       () => Checker.checkItems(
-        facts.select("filename", "ocid", "release_id", "hash_md5", "data")
-          .join(pkgs.select("filename", "package_data"), Seq("filename"), "left")
-          .select(Checker.checkId.as("id"), col("data"), col("package_data")),
-        "release", spark)
+        checkInput(spark, lakeDir, "release", collectionId, collectionId), "release", spark)
         .filter(!col("ok")).count())
     plane = plane.copy(collections = plane.collections.updated(compiledId,
       plane.collection(compiledId).copy(compilationEnqueued = true)))
 
     // completion gates + cached counts, leaf-first: compiled → upgraded →
     // original
-    val nItems = facts.count()
+    val nItems = Sink.readFacts(spark, s"$lakeDir/release")
+      .filter(col("collection_id") === collectionId).count()
     val nCompiled = Sink.readFacts(spark, s"$lakeDir/compiled_release")
       .filter(col("collection_id") === compiledId).count()
     plane = Control.complete(plane, compiledId, now, 0L, 0L, nCompiled)
@@ -595,7 +571,8 @@ object Pipeline {
   }
 
   /** [[compileAndFinish]]'s merge chain: ONE merge pass over the
-    * compile base's release facts, emitting compiled rows into
+    * compile base's release facts, read straight from the lake and
+    * grouped by one ocid shuffle, emitting compiled rows into
     * `compiledId`'s compiled_release partition and merge warnings as its
     * notes. Returns the notes written. */
   private def compileMerged(
@@ -603,24 +580,12 @@ object Pipeline {
       lakeDir: String,
       compileBaseId: Long,
       compiledId: Long): Long = {
-    // Bucket once at the compile boundary, compile with ZERO exchanges:
-    // `writeFacts` already ocid-clustered the lake files at load, so this
-    // write re-materializes that distribution WITH catalog metadata, and
-    // the co-located compile (plan-asserted in PipelineSpec/SinkSpec) then
-    // satisfies its grouping from the bucketed scan — no shuffle in the
-    // compile itself, and the bucketed artifact serves every later
-    // recompile or per-ocid analytic pass shuffle-free (S7's
-    // bucket-once-compile-many warehouse shape). Bucket count mirrors the
-    // local shuffle parallelism; a cluster deployment sizes it like
-    // spark.sql.shuffle.partitions.
-    val baseFacts = Sink.readFacts(spark, s"$lakeDir/release")
-      .filter(col("collection_id") === compileBaseId)
-    val tbl = bucketedCompileTable(lakeDir)
-    Sink.writeFactsBucketed(
-      baseFacts.select(col("ocid"), col("release_date").as("date"),
-        col("release_id").as("tiebreak"), col("data").as("release")),
-      tbl, buckets = 32)
-    val compileOut = Compile.summariesAndWarningsCoLocated(spark.table(tbl), spark)
+    val compileOut = Compile.summariesAndWarnings(
+      Sink.readFacts(spark, s"$lakeDir/release")
+        .filter(col("collection_id") === compileBaseId)
+        .select(col("ocid"), col("release_date").as("date"),
+          col("release_id").as("tiebreak"), col("data").as("release")),
+      spark)
       .toDF()
       .persist()
     val compiled = compileOut.filter(col("summary").isNotNull)
@@ -641,29 +606,35 @@ object Pipeline {
     // child's note partition is NOT exclusively this job's output —
     // Api.create persists the user's creation note on every created
     // collection including the compiled one, and an overwrite would
-    // silently delete it on any compile emitting >=1 warning (ADVICE r7).
-    // Same shape as loadRecordBatch's note path: anti-join the fresh
-    // warnings on (code, note, data) against the partition's existing
-    // rows, so a retried compile re-emits only what is missing
-    val compileNotes = (Sink.readOrEmpty(spark, s"$lakeDir/collection_note") match {
-      case Some(existing) => freshCompileNotes.join(
-        existing.filter(col("collection_id") === compiledId)
-          .select("code", "note", "data"),
-        Seq("code", "note", "data"), "left_anti")
-      case None => freshCompileNotes
-    }).persist()
-    // count (and materialize the cache) BEFORE the append: the anti-join
-    // plan reads the very table being written
-    val nNotes = compileNotes.count()
-    Sink.writeByCollection(compileNotes, s"$lakeDir/collection_note")
-    compileNotes.unpersist()
+    // silently delete it on any compile emitting >=1 warning (ADVICE r7)
+    val nNotes = appendNewNotes(spark, lakeDir, freshCompileNotes, compiledId)
     compileOut.unpersist()
     nNotes
   }
 
-  /** The session-catalog name of a lake's ocid-bucketed compile-input
-    * table — one per lake directory, rebuilt by [[compileAndFinish]] and
-    * reusable shuffle-free by any later per-ocid pass. */
+  /** Append the `fresh` notes that collection `cid`'s `collection_note`
+    * partition does not hold yet, matched on (code, note, data), and
+    * return how many were appended: a replayed batch or compile re-emits
+    * its notes and only the missing ones land. */
+  private def appendNewNotes(
+      spark: SparkSession, lakeDir: String, fresh: DataFrame, cid: Long): Long = {
+    val notes = (Sink.readOrEmpty(spark, s"$lakeDir/collection_note") match {
+      case Some(existing) => fresh.join(
+        existing.filter(col("collection_id") === cid).select("code", "note", "data"),
+        Seq("code", "note", "data"), "left_anti")
+      case None => fresh
+    }).persist()
+    // count (and thereby materialize the cache) BEFORE the append: the
+    // anti-join plan reads the very table being written
+    val n = notes.count()
+    Sink.writeByCollection(notes, s"$lakeDir/collection_note")
+    notes.unpersist()
+    n
+  }
+
+  /** The session-catalog name the compile's ocid-bucketed input copy was
+    * once written under, one per lake directory. Nothing writes that
+    * table any more; the name remains for callers that still drop it. */
   def bucketedCompileTable(lakeDir: String): String =
     "graft_compile_in_" + graft.ocds.Canonical.md5hex(lakeDir).take(12)
 
@@ -696,17 +667,10 @@ object Pipeline {
       Sink.readOrEmpty(spark, s"$lakeDir/record") match {
         case None => (0L, 0L)
         case Some(all) =>
-          val facts = all.filter(col("collection_id") === collectionId)
-          val pkgs = spark.read.parquet(s"$lakeDir/package_data")
-            .filter(col("collection_id") === collectionId)
           val failures = Checker.checkItems(
-            facts.select(col("filename"), col("ocid"),
-              lit("").as("release_id"), col("hash_md5"), col("data"))
-              .join(pkgs.select("filename", "package_data"), Seq("filename"), "left")
-              .select(Checker.checkId.as("id"), col("data"), col("package_data")),
-            "record", spark)
+            checkInput(spark, lakeDir, "record", collectionId, collectionId), "record", spark)
             .filter(!col("ok")).count()
-          (facts.count(), failures)
+          (all.filter(col("collection_id") === collectionId).count(), failures)
       }
     val nCompiled = Sink.readOrEmpty(spark, s"$lakeDir/compiled_release")
       .map(_.filter(col("collection_id") === compiledId).count()).getOrElse(0L)
@@ -818,23 +782,7 @@ object Pipeline {
         .contains(graft.ingest.FormatDetect.Format.CompiledRelease) ||
         Sink.readOrEmpty(spark, s"$lakeDir/$factTable").isEmpty)
       return None
-    val allFacts = Sink.readFacts(spark, s"$lakeDir/$factTable")
-      .filter(col("collection_id") === cid)
-    val facts = files.fold(allFacts)(fs => allFacts.filter(col("filename").isin(fs: _*)))
-      .select(col("filename"), col("ocid"),
-        (if (isRecord) lit("") else col("release_id")).as("release_id"),
-        col("hash_md5"), col("data"))
-    // package_data can be legitimately absent (crash remnants, older
-    // lakes): the checker already treats a missing envelope as null
-    val withPkg = Sink.readOrEmpty(spark, s"$lakeDir/package_data") match {
-      case Some(p) => facts.join(
-        p.filter(col("collection_id") === rootId).select("filename", "package_data"),
-        Seq("filename"), "left")
-      case None => facts.withColumn(
-        "package_data", lit(null).cast(org.apache.spark.sql.types.StringType))
-    }
-    val rows0 = withPkg
-      .select(Checker.checkId.as("id"), col("data"), col("package_data"))
+    val rows0 = checkInput(spark, lakeDir, factTable, cid, rootId, files)
     // the streaming slice feeds rows TWICE — the driver-side touched-
     // bucket collect and the anti-join probe; persist so the md5-heavy
     // check-id projection and the package join run once per batch, not
@@ -858,6 +806,31 @@ object Pipeline {
     } finally {
       if (files.isDefined) { rows.unpersist(); () }
     }
+  }
+
+  /** The structural check's input over collection `cid`'s `factTable`
+    * rows (only `files`' rows when given): the stable check id, the item,
+    * and the envelope rebuilt from its file's `package_data` row, stored
+    * under the root collection `rootId` (checker.py:101-108). Record rows
+    * carry no release id. `package_data` can be legitimately absent (crash
+    * remnants, older lakes): the checker already treats a missing envelope
+    * as null. */
+  private def checkInput(
+      spark: SparkSession, lakeDir: String, factTable: String, cid: Long, rootId: Long,
+      files: Option[Seq[String]] = None): DataFrame = {
+    val all = Sink.readFacts(spark, s"$lakeDir/$factTable").filter(col("collection_id") === cid)
+    val facts = files.fold(all)(fs => all.filter(col("filename").isin(fs: _*)))
+      .select(col("filename"), col("ocid"),
+        (if (factTable == "record") lit("") else col("release_id")).as("release_id"),
+        col("hash_md5"), col("data"))
+    val withPkg = Sink.readOrEmpty(spark, s"$lakeDir/package_data") match {
+      case Some(p) => facts.join(
+        p.filter(col("collection_id") === rootId).select("filename", "package_data"),
+        Seq("filename"), "left")
+      case None => facts.withColumn(
+        "package_data", lit(null).cast(org.apache.spark.sql.types.StringType))
+    }
+    withPkg.select(Checker.checkId.as("id"), col("data"), col("package_data"))
   }
 
   /** The already-checked slice a check pass anti-joins against. With

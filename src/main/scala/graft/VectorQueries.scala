@@ -3524,10 +3524,9 @@ object VectorQueries {
         // sources cover which regions of embedding space. The embeddings
         // table carries no source, so the doc join IS the operator: an
         // id-keyed shuffle_hash join (doc_id = vec_id; at 100 TB both
-        // tables are id-bucketed and the join co-locates shuffle-free —
-        // the summariesCoLocated layout), then one (source, cell)
-        // aggregation and a window over the per-source totals for the
-        // share. The window partitions the ALREADY-AGGREGATED frame
+        // tables are id-bucketed and the join co-locates shuffle-free),
+        // then one (source, cell) aggregation and a window over the
+        // per-source totals for the share. The window partitions the ALREADY-AGGREGATED frame
         // (≤ sources × k rows), not the corpus.
         val emb = Tables.embeddings(s, d)
         val cells = assignedCells(s, emb, trainCentroids(emb, s))

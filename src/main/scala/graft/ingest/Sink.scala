@@ -13,9 +13,10 @@ import graft.ocds.Compile
   *  - fact tables partitioned by `collection_id` — collection wipes become
   *    partition drops (S9) and every per-collection job prunes at the scan;
   *  - rows hash-clustered by `ocid` within each collection partition
-  *    (repartition before write), so the compile job's shuffle reads
-  *    ocid-clustered files; on a warehouse with bucketed tables this
-  *    becomes `bucketBy(ocid)` and the compile shuffle disappears;
+  *    (repartition before write), so the compile reads ocid-clustered
+  *    files straight from the lake and pays its one ocid shuffle
+  *    (`Compile.summariesAndWarnings`); no copy of the facts is kept
+  *    outside the lake;
   *  - the content-addressed store partitioned by a 2-hex-char prefix of
   *    `hash_md5` (256 buckets) — the dedup anti-join (S8) prunes to one
   *    bucket per hash, and inserts spread uniformly.
@@ -398,19 +399,6 @@ object Sink {
           "fresh directory) before appending bucketed checks")
     }
   }
-
-  /** S7 at warehouse scale: the fact table BUCKETED by ocid — written once
-    * into the session catalog, after which every compile reads it with
-    * zero exchanges (`Compile.summariesCoLocated`): the bucketed scan's
-    * HashPartitioning(ocid) satisfies the compile's clustered-distribution
-    * requirement, replacing the per-job shuffle entirely. */
-  def writeFactsBucketed(
-      facts: DataFrame, table: String, buckets: Int = 256, mode: String = "overwrite"): Unit =
-    facts.write
-      .mode(mode)
-      .bucketBy(buckets, "ocid")
-      .format("parquet")
-      .saveAsTable(table)
 
   /** Training-shard writer — materializes a sharded layout frame
     * (`TextQueries.shuffleExportOf(docs, n, payloadCols)` — (shard, seq,

@@ -152,76 +152,6 @@ object Compile {
     }
   }
 
-  /** null-first UTF-8-byte string ordering — EXACTLY Spark's own string
-    * sort semantics (UTF8String compares bytes; nulls first ascending), so
-    * the in-memory group sort below picks the same merge order
-    * `sortWithinPartitions` would. Java's compareTo is NOT equivalent: it
-    * compares UTF-16 units, which inverts supplementary-plane characters
-    * against U+E000..U+FFFF. */
-  private val sparkStringOrdering: Ordering[String] = new Ordering[String] {
-    def compare(a: String, b: String): Int =
-      if (a eq b) 0
-      else if (a == null) -1
-      else if (b == null) 1
-      else {
-        val ab = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val bb = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        val n = math.min(ab.length, bb.length)
-        var i = 0
-        var c = 0
-        while (i < n && c == 0) { c = (ab(i) & 0xff) - (bb(i) & 0xff); i += 1 }
-        if (c != 0) c else ab.length - bb.length
-      }
-  }
-
-  /** [[summaries]] expressed through Catalyst's distribution framework
-    * (`groupBy(col).as[K,V].flatMapGroups`) instead of an explicit
-    * repartition: the grouping key is the `ocid` COLUMN, so a scan that
-    * already provides hash distribution on it — a lake table written with
-    * `Sink.writeFactsBucketed` — satisfies the requirement and the whole
-    * compile runs with ZERO exchanges (bucket once at write time, compile
-    * any number of times shuffle-free; the warehouse shape promised in
-    * Sink's scaladoc). On a non-bucketed input Catalyst inserts the same
-    * single ocid shuffle [[summaries]] does explicitly, and the in-group
-    * (date, tiebreak) sort uses [[sparkStringOrdering]], so results are
-    * identical either way — including null dates/tiebreaks and non-BMP
-    * strings. Memory bound is unchanged: one group buffered in-partition. */
-  def summariesCoLocated(releases: DataFrame, s: SparkSession): Dataset[CompiledSummary] = {
-    import s.implicits._
-    implicit val pairOrd: Ordering[(String, String)] =
-      Ordering.Tuple2(sparkStringOrdering, sparkStringOrdering)
-    releases
-      .select(col("ocid").cast("string"), col("date").cast("string"),
-        col("tiebreak").cast("string"), col("release"))
-      .groupBy(col("ocid")).as[String, (String, String, String, String)]
-      .flatMapGroups { (ocid, rows) =>
-        val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-        summarize(ocid, sorted.size, Merge.compile(ocid, sorted.map(_._4)))
-      }
-  }
-
-  /** [[summariesAndWarnings]] through the distribution framework, like
-    * [[summariesCoLocated]]: over a bucketed input the WHOLE one-pass
-    * compile (summaries + warning side-output together) runs with zero
-    * exchanges; over a plain input Catalyst inserts the same single ocid
-    * shuffle. In-group order and results are identical to the explicit-
-    * repartition form ([[sparkStringOrdering]]). */
-  def summariesAndWarningsCoLocated(releases: DataFrame, s: SparkSession): Dataset[CompileOut] = {
-    import s.implicits._
-    implicit val pairOrd: Ordering[(String, String)] =
-      Ordering.Tuple2(sparkStringOrdering, sparkStringOrdering)
-    releases
-      .select(col("ocid").cast("string"), col("date").cast("string"),
-        col("tiebreak").cast("string"), col("release"))
-      .groupBy(col("ocid")).as[String, (String, String, String, String)]
-      .flatMapGroups { (ocid, rows) =>
-        val sorted = rows.toSeq.sortBy(r => (r._2, r._3))
-        val res = Merge.compile(ocid, sorted.map(_._4))
-        summarize(ocid, sorted.size, res).map(x => CompileOut(Some(x), None)) ++
-          res.warnings.map(w => CompileOut(None, Some(toWarningRow(ocid, w))))
-      }
-  }
-
   /** One extension-ruled compiled process (A8 output row). */
   final case class ExtSummary(ocid: String, n_parties: Long, n_extensions: Long)
 

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.control.{Control, Wipe}
@@ -36,6 +38,15 @@ class PipelineSpec extends AnyFunSuite {
 
   test("loadAndCompile runs §3.1 end-to-end and finalizes both collections") {
     val lake = Files.createTempDirectory("graft-lake").toString
+    val warehouse = java.nio.file.Paths.get(
+      new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir")).toUri.getPath)
+    def warehouseEntries(): Set[String] =
+      if (!Files.isDirectory(warehouse)) Set.empty
+      else {
+        val ls = Files.list(warehouse)
+        try ls.iterator.asScala.map(_.getFileName.toString).toSet finally ls.close()
+      }
+    val warehouseBefore = warehouseEntries()
     val report = Pipeline.loadAndCompile(s, inputTree().toString, lake, now = "2020-06-01 00:00:00")
 
     assert(report.files === 2)
@@ -58,15 +69,26 @@ class PipelineSpec extends AnyFunSuite {
     assert(compiled.filter(col("ocid") === "ocds-a")
       .select("n_releases").collect().head.getLong(0) === 2L)
 
-    // the compile stage ran CO-LOCATED off the ocid-bucketed compile-input
-    // table it materialized: the same plan re-built over that table shows
-    // ZERO exchanges (the shuffle-free warehouse shape, VERDICT r6 #5)
-    val tbl = Pipeline.bucketedCompileTable(lake)
-    assert(s.catalog.tableExists(tbl))
-    val compilePlan = graft.ocds.Compile
-      .summariesAndWarningsCoLocated(s.table(tbl), s)
+    // the compile reads the lake's release facts directly: it leaves no
+    // copy of them in the session catalog or under the warehouse dir,
+    // where no collection wipe would ever reach it
+    val catalogCopies = s.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith("graft_compile_in_"))
+    assert(catalogCopies.isEmpty, catalogCopies.mkString(", "))
+    assert(warehouseEntries() -- warehouseBefore === Set.empty[String])
+    // …and its plan over those facts pays exactly one exchange, the ocid
+    // shuffle at the configured partition count
+    val compilePlan = graft.ocds.Compile.summariesAndWarnings(
+      Sink.readFacts(s, s"$lake/release")
+        .filter(col("collection_id") === report.collectionId)
+        .select(col("ocid"), col("release_date").as("date"),
+          col("release_id").as("tiebreak"), col("data").as("release")), s)
       .queryExecution.executedPlan.toString
-    assert(!compilePlan.contains("Exchange"), s"unexpected shuffle:\n$compilePlan")
+    val exchanges = compilePlan.linesIterator.filter(_.contains("Exchange")).toSeq
+    val partitions = s.conf.get("spark.sql.shuffle.partitions")
+    assert(exchanges.size === 1, compilePlan)
+    assert(exchanges.head.matches(s".*Exchange hashpartitioning\\(ocid#\\d+, $partitions\\).*"),
+      compilePlan)
 
     // and the wipe removes the whole tree from the written layout
     import s.implicits._

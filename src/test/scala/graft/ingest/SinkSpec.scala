@@ -101,28 +101,6 @@ class SinkSpec extends AnyFunSuite {
     assert(checkFiles.values.flatten.toSet.size === parallelism, checkFiles)
   }
 
-  test("a bucketed fact table compiles with ZERO exchanges; plain input still shuffles once") {
-    import org.apache.spark.sql.functions.col
-    s.sql("DROP TABLE IF EXISTS graft_bucketed_spec")
-    Sink.writeFactsBucketed(
-      facts.select("ocid", "date", "tiebreak", "release"), "graft_bucketed_spec", buckets = 2)
-    val fromBucketed = Compile.summariesCoLocated(s.table("graft_bucketed_spec"), s)
-    val bucketedPlan = fromBucketed.queryExecution.executedPlan.toString
-    // the whole point: the bucketed scan's distribution satisfies the
-    // group-by requirement, so NO shuffle anywhere in the compile
-    assert(!bucketedPlan.contains("Exchange"), s"unexpected shuffle:\n$bucketedPlan")
-    // …and on a plain (non-bucketed) frame the same code path lets
-    // Catalyst insert the one ocid shuffle summaries() does explicitly
-    val fromPlain = Compile.summariesCoLocated(facts, s)
-    assert(fromPlain.queryExecution.executedPlan.toString.contains("Exchange"))
-    // results identical to the explicit-repartition job on the same rows
-    val expected = Compile.summaries(
-      facts.select("ocid", "date", "tiebreak", "release"), s).collect().sortBy(_.ocid).toSeq
-    assert(fromBucketed.collect().sortBy(_.ocid).toSeq === expected)
-    assert(fromPlain.collect().sortBy(_.ocid).toSeq === expected)
-    s.sql("DROP TABLE IF EXISTS graft_bucketed_spec")
-  }
-
   test("compactCollection after a mid-swap crash keeps every row (recovery precedes the plan)") {
     import java.nio.file.{Files => JF, Paths => JP}
     import org.apache.spark.sql.functions.col
